@@ -11,6 +11,9 @@ SURVEY.md §3.1/§4.1. Per outer iteration:
     partial+final aggregation the reference hand-rolled), broadcast
     the tiny centroid table, and extend each vector's path with the
     index of its nearest centroid (vectorized argmin in mapInPandas).
+    The driver only splits paths too large for one task
+    (``nndescent.EXACT_BLOCK_MAX`` rows); a path that fits finishes
+    its remaining levels inside the leaf task below, by the same rule.
  2. **Local graph construction** (reference local_graph_construction,
     mrdf.py:148-153 — which collected EVERY subset to the driver and
     looped; the documented "hangs on a cluster" cause, README.md:77):
@@ -25,8 +28,12 @@ SURVEY.md §3.1/§4.1. Per outer iteration:
     reference did ``sc.parallelize(rdd.collect())`` (mrdf.py:159).
 
 Driver boundary crossings per iteration: one small centroid collect
-per division round + one scalar count — vs the reference's ≥6 full
-dataset round-trips.
+and one gate count per division round on paths above
+``EXACT_BLOCK_MAX`` rows, + one scalar count — vs the reference's ≥6
+full dataset round-trips. Once every path fits a task, the rest of the
+forest (its last division levels and its leaves) is one Spark job: an
+input of ≤ 4096 rows builds each forest without any driver division
+round.
 
 Determinism: all randomness is derived from (seed, iteration,
 division round, path, id) — same seed ⇒ identical graph, which the
@@ -41,6 +48,7 @@ dependence a 1000-executor deployment cannot carry).
 
 from __future__ import annotations
 
+import hashlib
 import time
 import warnings
 import zlib
@@ -49,7 +57,8 @@ from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark import inheritable_thread_target
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -59,7 +68,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pyspark_mrdf_spark.algorithms.nndescent import nn_descent
+from pyspark_mrdf_spark.algorithms.nndescent import EXACT_BLOCK_MAX, nn_descent
 from pyspark_mrdf_spark.functions.vector import pairwise_l2_sq
 
 EDGE_SCHEMA = StructType(
@@ -77,6 +86,12 @@ EDGE_SCHEMA = StructType(
 # the dict broadcast wins (one Python lookup per batch, no fan-out
 # join). 4096 paths ≈ ρ·4096 centroid vectors ≈ a few MB: safely small.
 CENTROID_BROADCAST_MAX_PATHS = 4096
+
+# Paths of at most this many rows finish their remaining division
+# levels inside the leaf task (``_finish_division``) rather than in
+# driver rounds. It is the leaf kernel's one-gemm memory envelope, so a
+# path that fits it fits one task. 0 restores the all-driver loop.
+_IN_TASK_DIVISION_MAX = EXACT_BLOCK_MAX
 
 
 def knn_graph(
@@ -174,7 +189,20 @@ def knn_graph(
     iteration 2's merge — so at ``max_iter=1`` (a single forest, no
     merge) no ratio exists, neither path can fire, and the hands-free
     guarantee does not apply; use ``max_iter >= 3`` (or the τ-driven
-    ``max_iter=0``) wherever that guarantee matters (advisor r11)."""
+    ``max_iter=0``) wherever that guarantee matters (advisor r11).
+
+    **In-task division levels:** the driver loop splits only paths of
+    more than ``nndescent.EXACT_BLOCK_MAX`` (4096) rows. The leaf task
+    finishes any smaller path by the driver's own rule (round seed,
+    md5 top-ρ sample, nearest-centroid argmin, child path names), so
+    the forest — and the graph — is bit-identical to splitting every
+    level on the driver, and a forest whose paths all fit a task is
+    one Spark job. A path finished in-task always takes the dict
+    tier's NumPy argmin, never the distributed join tier
+    (``centroid_broadcast_max_paths``). ``metrics_out`` still reports
+    the whole tree: ``divisions`` is the deepest leaf's depth and
+    ``n_leaves``/``max_leaf`` count the final leaves; tracing costs
+    one extra job per forest, an untraced call none."""
     spark = df.sparkSession
     sc = spark.sparkContext
     # materialize the working set once: spread a possibly-few-files
@@ -218,27 +246,30 @@ def knn_graph(
             n_total, dim, n_total * (2 * k_work) ** 2, sc.defaultParallelism
         )
 
-    def _build_forest_graph(iteration: int) -> tuple[DataFrame, int, dict | None]:
+    def _build_forest_graph(iteration: int) -> tuple[DataFrame, dict | None]:
         """Division + per-subset NN-Descent for one iteration: the
         random forest's local k-NN graph, materialized. Depends only on
         (base, seed, iteration) — NOT on the running merged graph — so
         successive iterations' forests can build concurrently."""
         data = base.withColumn("path", F.lit(""))
+        # the driver splits only paths too large for one task; smaller
+        # ≥α paths finish their levels inside the leaf task (_local)
+        split_min = max(alpha, _IN_TASK_DIVISION_MAX + 1)
 
-        # ---- division: split every ≥α subset into ρ children --------
+        # ---- division: split every oversized path into ρ children ---
         division = 0
         join_tier_rounds = 0
         while True:
             division += 1
-            # loop gate: any path still ≥ α? One cheap JVM aggregate —
-            # deliberately NOT fused into the sampling plan: the gate
-            # runs once more than the sampler (the final "all small"
-            # round), and a fused plan would pay the Python sampling
-            # stage on every gate evaluation. Division 1 needs no job at
-            # all: every row still carries the root path "", so the
-            # gate is just n_total ≥ α.
+            # loop gate: any path still ≥ split_min? One cheap JVM
+            # aggregate — deliberately NOT fused into the sampling plan:
+            # the gate runs once more than the sampler (the final "all
+            # small" round), and a fused plan would pay the Python
+            # sampling stage on every gate evaluation. Division 1 needs
+            # no job at all: every row still carries the root path "",
+            # so the gate is just n_total ≥ split_min.
             if division == 1:
-                if n_total < alpha:
+                if n_total < split_min:
                     break
                 big = spark.createDataFrame([("",)], "path string")
                 n_big = 1
@@ -246,7 +277,7 @@ def knn_graph(
                 big = (
                     data.groupBy("path")
                     .count()
-                    .filter(F.col("count") >= alpha)
+                    .filter(F.col("count") >= split_min)
                     .select("path")
                 )
                 n_big = big.count()
@@ -255,8 +286,9 @@ def knn_graph(
             # seeded ρ-sample per oversized path (reference
             # centroid_sampling_2, mrdf.py:75-121: per-partition partial
             # sample + final merge by key)
-            rand_seed = seed + 1_000_003 * iteration + 1_009 * division
-            cents = _sample_centroids(data, big, rho, rand_seed)
+            cents = _sample_centroids(
+                data, big, rho, _round_seed(seed, iteration, division)
+            )
             if n_big > centroid_broadcast_max_paths:
                 # too many oversized paths for a driver-side dict —
                 # keep centroids distributed (join + min_by). Lazy
@@ -284,11 +316,7 @@ def knn_graph(
                         if not mask.any():
                             continue
                         vecs = np.stack(pdf.loc[mask, "vec"].to_numpy()).astype(np.float64)
-                        # nearest-centroid argmin (reference
-                        # tree_path_extension map fn, mrdf.py:130-146),
-                        # vectorized over the whole Arrow batch
-                        d2 = pairwise_l2_sq(vecs, cents_m)
-                        child = d2.argmin(axis=1)
+                        child = _nearest_centroid(vecs, cents_m)
                         out_paths[mask] = np.array([f"{p},{c}" for c in child])
                     pdf = pdf.copy()
                     pdf["path"] = out_paths
@@ -300,43 +328,65 @@ def knn_graph(
             # former dedicated materialization job into it
             data = data.mapInPandas(_extend, data.schema).localCheckpoint(eager=False)
 
-        # ---- local NN-Descent per ≤α subset -------------------------
-        def _local(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            path = key[0]
+        def _leaves(
+            key: tuple, pdf: pd.DataFrame
+        ) -> Iterator[tuple[str, np.ndarray, np.ndarray]]:
             ids = pdf["id"].to_numpy(dtype=np.int64)
             mat = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-            rng = np.random.default_rng(
-                (seed, iteration, zlib.crc32(path.encode("utf8")))
-            )
-            edges = nn_descent(
-                ids,
-                mat,
-                k_work,
-                sample_rate=nnd_sample_rate,
-                precision=nnd_precision,
-                rng=rng,
-            )
+            for leaf, idx in _finish_division(
+                key[0], ids, mat, alpha=alpha, rho=rho, seed=seed, iteration=iteration
+            ):
+                yield leaf, ids[idx], mat[idx]
+
+        # ---- local NN-Descent per ≤α subset (after the path's
+        # in-task division levels) -----------------------------------
+        def _local(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+            edges = []
+            for leaf, ids, mat in _leaves(key, pdf):
+                rng = np.random.default_rng(
+                    (seed, iteration, zlib.crc32(leaf.encode("utf8")))
+                )
+                edges += nn_descent(
+                    ids,
+                    mat,
+                    k_work,
+                    sample_rate=nnd_sample_rate,
+                    precision=nnd_precision,
+                    rng=rng,
+                )
             return pd.DataFrame(edges, columns=["src", "dst", "dist_sq"])
 
         forest_stats: dict | None = None
         if metrics_out is not None:
-            # tier-activation evidence for the run artifact: leaf-size
-            # stats prove which NN-Descent kernel the leaves took
-            # (≤4096 exact gemm, ≤32768 tiled exact, else iterative),
-            # join_tier_rounds proves the distributed centroid path ran
+            # tier-activation evidence for the run artifact, over the
+            # WHOLE tree (the in-task levels are replayed division-only,
+            # no NN-Descent): leaf-size stats prove which NN-Descent
+            # kernel the leaves took (≤4096 exact gemm, ≤32768 tiled
+            # exact, else iterative), divisions is the deepest leaf's
+            # depth, join_tier_rounds proves the distributed centroid
+            # path ran
+            def _leaf_sizes(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+                leaves = [(leaf.count(","), len(ids)) for leaf, ids, _ in _leaves(key, pdf)]
+                return pd.DataFrame(leaves, columns=["depth", "n"])
+
             row = (
                 data.groupBy("path")
-                .count()
-                .agg(F.count(F.lit(1)).alias("n_leaves"), F.max("count").alias("max_leaf"))
+                .applyInPandas(_leaf_sizes, "depth long, n long")
+                .agg(
+                    F.count(F.lit(1)).alias("n_leaves"),
+                    F.max("n").alias("max_leaf"),
+                    F.max("depth").alias("divisions"),
+                )
                 .collect()[0]
             )
             forest_stats = {
+                "divisions": row["divisions"] or 0,
                 "n_leaves": row["n_leaves"],
                 "max_leaf": row["max_leaf"],
                 "join_tier_rounds": join_tier_rounds,
             }
         g_prime = data.groupBy("path").applyInPandas(_local, EDGE_SCHEMA)
-        return g_prime.localCheckpoint(eager=True), division - 1, forest_stats
+        return g_prime.localCheckpoint(eager=True), forest_stats
 
     # Forest pipelining: iteration i's forest depends only on
     # (seed, i), never on the running merged graph, so future forests
@@ -368,8 +418,12 @@ def knn_graph(
             while next_to_submit <= target and (
                 not max_iter_eff or next_to_submit <= max_iter_eff
             ):
+                # wrapped per submit: the pool thread takes the caller's
+                # job group, local properties and session tags as they
+                # are now, so the forest's jobs attribute to the caller
                 futures[next_to_submit] = executor.submit(
-                    _build_forest_graph, next_to_submit
+                    inheritable_thread_target(spark)(_build_forest_graph),
+                    next_to_submit,
                 )
                 next_to_submit += 1
 
@@ -377,7 +431,7 @@ def knn_graph(
         while True:
             iteration += 1
             iter_t0 = time.monotonic()
-            g_prime, divisions, forest_stats = futures.pop(iteration).result()
+            g_prime, forest_stats = futures.pop(iteration).result()
             stop_by_iter = bool(max_iter_eff) and iteration >= max_iter_eff
             if not stop_by_iter:
                 _submit_through(iteration + lookahead)
@@ -438,7 +492,6 @@ def knn_graph(
                 metrics_out.append(
                     {
                         "iteration": iteration,
-                        "divisions": divisions,
                         "changed_ratio": None if ratio is None else round(ratio, 6),
                         "seconds": round(time.monotonic() - iter_t0, 3),
                         "k": k,
@@ -558,6 +611,75 @@ def knn_graph(
     )
 
 
+def _round_seed(seed: int, iteration: int, division: int) -> int:
+    """Sampling seed of one division round; a path at depth d is split
+    by round d + 1, on the driver or in-task alike."""
+    return seed + 1_000_003 * iteration + 1_009 * division
+
+
+def _md5_uniform_col(id_col: str, rand_seed: int) -> Column:
+    """Portable uniform in [0, 1) per id: the first 8 md5 hex chars of
+    ``"<id>:<rand_seed>"`` over 2³². ``_md5_uniform`` is its NumPy twin."""
+    return (
+        F.conv(
+            F.substring(F.md5(F.concat_ws(":", F.col(id_col), F.lit(int(rand_seed)))), 1, 8),
+            16,
+            10,
+        ).cast("bigint")
+        / F.lit(4294967296.0)
+    )
+
+
+def _md5_uniform(ids: np.ndarray, rand_seed: int) -> np.ndarray:
+    """NumPy twin of ``_md5_uniform_col``: the same draw per id, so an
+    in-task sample picks the same centroids as the driver's."""
+    return np.array(
+        [
+            int(hashlib.md5(f"{i}:{rand_seed}".encode()).hexdigest()[:8], 16)
+            for i in ids.tolist()
+        ],
+        dtype=np.float64,
+    ) / 4294967296.0
+
+
+def _nearest_centroid(vecs: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Index of each row's nearest centroid, ties → lowest index
+    (reference tree_path_extension map fn, mrdf.py:130-146). Each row's
+    distances are computed on their own, so a row's child does not
+    depend on which other rows share its batch or task."""
+    return pairwise_l2_sq(vecs, cents).argmin(axis=1)
+
+
+def _finish_division(
+    path: str,
+    ids: np.ndarray,
+    mat: np.ndarray,
+    *,
+    alpha: int,
+    rho: int,
+    seed: int,
+    iteration: int,
+) -> list[tuple[str, np.ndarray]]:
+    """Split one path's rows in-task until every leaf holds < α rows,
+    by the driver loop's rule: the round seed of the path's depth, the
+    top-ρ sample by (md5 uniform, id), the nearest-centroid argmin and
+    ``f"{p},{c}"`` child names. Returns (leaf path, row positions)
+    pairs; a path already below α is its own single leaf."""
+    leaves = []
+    todo = [(path, np.arange(len(ids)))]
+    while todo:
+        p, idx = todo.pop()
+        if len(idx) < alpha:
+            leaves.append((p, idx))
+            continue
+        sub = ids[idx]
+        r = _md5_uniform(sub, _round_seed(seed, iteration, p.count(",") + 1))
+        cents = mat[idx[np.lexsort((sub, r))[:rho]]]
+        child = _nearest_centroid(mat[idx], cents)
+        todo.extend((f"{p},{c}", idx[child == c]) for c in np.unique(child))
+    return leaves
+
+
 def _sample_centroids(
     data: DataFrame, big: DataFrame, rho: int, rand_seed: int
 ) -> DataFrame:
@@ -582,18 +704,7 @@ def _sample_centroids(
     # depend on the physical partition layout (different cluster size
     # ⇒ different forest ⇒ different graph).
     cand = data.join(F.broadcast(big), "path").select(
-        "path",
-        "id",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(":", F.col("id"), F.lit(int(rand_seed)))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            / F.lit(4294967296.0)
-        ).alias("r"),
+        "path", "id", _md5_uniform_col("id", rand_seed).alias("r")
     )
 
     def _partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -2,7 +2,7 @@
 inside whole-stage codegen, no Python in the hot path).
 
 Capabilities (north-star text analysis over ``documents``):
- - tokenization (whitespace + BPE-ish regex splitting)
+ - whitespace tokenization
  - token / distinct-token counting
  - quality scoring (length, stopword ratio, type-token ratio)
  - language-ID n-gram/stopword heuristic
@@ -27,13 +27,6 @@ def tokens(col: str | Column = "text") -> Column:
     """Whitespace tokenization."""
     c = F.col(col) if isinstance(col, str) else col
     return F.split(c, " ")
-
-
-def bpe_ish_tokens(col: str | Column = "text") -> Column:
-    """BPE-ish sub-word split: alternating letter/digit boundaries and
-    punctuation become token breaks (regex, JVM-side)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.split(F.regexp_replace(c, r"([0-9]+|[^a-zA-Z0-9 ]+)", r" $1 "), r"\s+")
 
 
 def n_tokens(col: str | Column = "text") -> Column:

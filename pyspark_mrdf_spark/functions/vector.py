@@ -16,7 +16,6 @@ orderings are stable and oracle-comparable.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -180,24 +179,3 @@ def topk_ids(dist_row: np.ndarray, ids: np.ndarray, k: int, exclude: int | None 
         if len(out) == k:
             break
     return out
-
-
-def cosine_pandas(a: str | Column, b: str | Column) -> Column:
-    """Cosine similarity as an Arrow-batched pandas UDF.
-
-    Same math as ``cosine`` (double dot / norms) but vectorized NumPy
-    per batch instead of Catalyst higher-order functions — HOF lambdas
-    are interpreted per element, so on wide pair sets (e.g. a similarity
-    self-join) this is the hot-path variant; ``cosine`` remains for
-    one-off expressions inside otherwise-codegen'd plans."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        ma = np.stack(sa.to_numpy()).astype(np.float64)
-        mb = np.stack(sb.to_numpy()).astype(np.float64)
-        num = np.einsum("ij,ij->i", ma, mb)
-        den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-        return pd.Series(num / den)
-
-    return _cos(_c(a), _c(b))

@@ -206,6 +206,8 @@ def q55_mrdf_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q56_mrdf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from pyspark_mrdf_spark.algorithms.recall import recall
 
     # The exact side (q50's blocked distributed tier — corpus never
@@ -216,9 +218,11 @@ def q56_mrdf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session-memoized: when q50/q55 already ran, each is served from
     # the registry. Identical results to the sequential schedule —
     # recall() compares two already-materialized graphs in one action.
+    # The pool thread inherits the caller's job group and session tags,
+    # so the exact side's jobs attribute to this query.
     pool = ThreadPoolExecutor(max_workers=1)
     try:
-        fut = pool.submit(_exact_graph, spark, sf_dir)
+        fut = pool.submit(inheritable_thread_target(spark)(_exact_graph), spark, sf_dir)
         g = _mrdf_graph(spark, sf_dir)
         g_exact = fut.result()
     finally:

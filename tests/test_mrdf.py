@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from pyspark_mrdf_spark.algorithms import mrdf
 from pyspark_mrdf_spark.algorithms.mrdf import format_adjacency, knn_graph
 from pyspark_mrdf_spark.algorithms.nndescent import nn_descent, _exact_block
 from pyspark_mrdf_spark.algorithms.recall import recall, recall_vs_groundtruth
@@ -50,13 +51,17 @@ def test_mrdf_seeded_determinism(spark, emb):
     assert rows_a == rows_b
 
 
-def test_mrdf_distributed_centroids_tier(spark, emb, g_exact):
+def test_mrdf_distributed_centroids_tier(spark, emb, g_exact, monkeypatch):
     # centroid_broadcast_max_paths=0 forces the join+min_by tier (no
     # driver-side centroid dict) on every division round; tiny alpha
-    # forces many oversized paths. Same recall contract as the dict
-    # tier, and seeded determinism holds.
+    # forces many oversized paths. n=500 fits one task, so the in-task
+    # threshold is forced to 0 to keep the divisions on the driver.
+    # Same recall contract as the dict tier, and seeded determinism holds.
+    monkeypatch.setattr(mrdf, "_IN_TASK_DIVISION_MAX", 0)
     kw = dict(rho=4, alpha=250, tau=0.0, seed=42, max_iter=3, centroid_broadcast_max_paths=0)
-    g = knn_graph(emb, K, **kw)
+    metrics: list = []
+    g = knn_graph(emb, K, metrics_out=metrics, **kw)
+    assert metrics and all(m["join_tier_rounds"] >= 1 for m in metrics)
     r = recall(g_exact, g)
     assert r >= 0.9, f"join-tier MRDF recall {r} below threshold"
     rows_a = sorted(map(tuple, g.select("src", "dst").collect()))
@@ -143,10 +148,12 @@ def test_nndescent_iterative_rounds_recall(monkeypatch):
     assert hits / total >= 0.9
 
 
-def test_mrdf_deep_division_recall(spark, emb, g_exact):
+def test_mrdf_deep_division_recall(spark, emb, g_exact, monkeypatch):
     # α=120 at n=500 forces ≥2 division rounds (500 → ~3×167 → ~9×56):
     # exercises multi-level tree-path extension, per-path centroid
-    # sampling on non-root paths, and the metrics hook
+    # sampling on non-root paths, and the metrics hook. The in-task
+    # threshold is forced to 0 so the rounds run as driver divisions.
+    monkeypatch.setattr(mrdf, "_IN_TASK_DIVISION_MAX", 0)
     metrics: list = []
     g = knn_graph(
         emb, K, rho=3, alpha=120, tau=0.01, seed=42, max_iter=3,
@@ -159,6 +166,103 @@ def test_mrdf_deep_division_recall(spark, emb, g_exact):
     ).collect()[0]
     assert (per_src["lo"], per_src["hi"]) == (K, K)
     assert recall(g_exact, g) >= 0.85
+
+
+def _forest_run(emb, metrics: list, **kw):
+    """One pinned 2-forest build without refinement: the union of the
+    two forests' leaf graphs, with dist_sq compared bit for bit."""
+    g = knn_graph(
+        emb, K, tau=-1.0, max_iter=2, refine_rounds=0, auto_escalate=False,
+        unconverged_warn_ratio=2.0, metrics_out=metrics, **kw,
+    )
+    return sorted((r["src"], r["dst"], r["dist_sq"].hex()) for r in g.collect())
+
+
+@pytest.mark.parametrize(
+    "alpha,rho,seed",
+    [
+        (250, 3, 1),
+        (60, 3, 2),  # ≥ 3 division levels
+        (500, 4, 3),  # the root path holds exactly α = n rows
+    ],
+)
+def test_in_task_division_matches_driver_loop(spark, emb, monkeypatch, alpha, rho, seed):
+    # Law: finishing the division levels inside the leaf task gives the
+    # same forest as splitting every level on the driver (threshold 0),
+    # at the default threshold and at one that mixes both.
+    tree_keys = ("iteration", "divisions", "n_leaves", "max_leaf", "join_tier_rounds")
+    runs = {}
+    for threshold in (0, 150, mrdf.EXACT_BLOCK_MAX):
+        monkeypatch.setattr(mrdf, "_IN_TASK_DIVISION_MAX", threshold)
+        metrics: list = []
+        edges = _forest_run(emb, metrics, alpha=alpha, rho=rho, seed=seed)
+        runs[threshold] = (edges, [{k: m[k] for k in tree_keys} for m in metrics])
+    ref_edges, ref_tree = runs[0]
+    assert ref_edges and len(ref_tree) == 2
+    if alpha == 60:
+        assert min(m["divisions"] for m in ref_tree) >= 3
+    if alpha == 500:
+        assert all(m["divisions"] >= 1 for m in ref_tree)
+    for threshold, (edges, tree) in runs.items():
+        assert tree == ref_tree, threshold
+        assert edges == ref_edges, threshold
+
+
+def test_md5_uniform_matches_jvm_expression(spark):
+    # the in-task sampler's Python uniform must equal the driver
+    # sampler's JVM draw for every id, including negative and > 2^31
+    from pyspark_mrdf_spark.algorithms.mrdf import _md5_uniform, _md5_uniform_col
+
+    ids = [0, 1, 7, -1, -42, 2**31 - 1, 2**31, 2**31 + 9, 2**40 + 3, -(2**33), 2**63 - 1]
+    df = spark.createDataFrame([(i,) for i in ids], "id long")
+    for rand_seed in (42, 42 + 1_000_003 * 2 + 1_009 * 3, 2**33 + 1):
+        rows = df.select(
+            "id",
+            F.expr(
+                "CAST(conv(substring(md5(concat_ws(':', id, "
+                f"{rand_seed})), 1, 8), 16, 10) AS BIGINT) / 4294967296D"
+            ).alias("sql"),
+            _md5_uniform_col("id", rand_seed).alias("col"),
+        ).collect()
+        jvm = {r["id"]: (r["sql"], r["col"]) for r in rows}
+        py = _md5_uniform(np.array(ids, dtype=np.int64), rand_seed)
+        for i, u in zip(ids, py.tolist()):
+            assert jvm[i] == (u, u), (i, rand_seed)
+
+
+def test_knn_graph_jobs_carry_caller_tag(spark, emb, monkeypatch):
+    # every job knn_graph launches — the forest look-ahead pool's
+    # included — carries the session tag of the calling thread
+    import time
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def jobs() -> dict[int, list[str]]:
+        jsc.listenerBus().waitUntilEmpty()
+        jl = jsc.statusStore().jobsList(None)
+        return {
+            jl.apply(i).jobId(): jl.apply(i).jobTags().mkString("\t").split("\t")
+            for i in range(jl.size())
+        }
+
+    # start from an idle context, so no other test's job lands in the window
+    deadline = time.monotonic() + 120
+    while sc.statusTracker().getActiveJobsIds() and time.monotonic() < deadline:
+        time.sleep(0.5)
+    before = set(jobs())
+    # driver divisions put gate/collect jobs on the pool threads too
+    monkeypatch.setattr(mrdf, "_IN_TASK_DIVISION_MAX", 0)
+    tag = "knn-graph-tag-test"
+    spark.addTag(tag)
+    try:
+        knn_graph(emb, K, rho=3, alpha=120, seed=5, max_iter=2, auto_escalate=False)
+    finally:
+        spark.removeTag(tag)
+    new = {j: tags for j, tags in jobs().items() if j not in before}
+    assert len(new) >= 6
+    untagged = sorted(j for j, tags in new.items() if not any(t.endswith("-" + tag) for t in tags))
+    assert not untagged, untagged
 
 
 def _uniform_emb(spark, n=2000, d=32, seed=13):
